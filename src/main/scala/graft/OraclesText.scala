@@ -1025,7 +1025,7 @@ object OraclesText {
          |  (bucket < rate_pm) AS keep
          |FROM r ORDER BY doc_id LIMIT 2000""".stripMargin,
 
-    // TextDedup.p25TempSweep: p7's rebalancer with the temperature dial
+    // TextDedup.p25TempSweep: p7's rebalancing with the temperature dial
     // swept at λ ∈ {¼, ½, 1} — exponents chosen so every leg is x,
     // sqrt(x) or sqrt(sqrt(x)) (IEEE-exact cross-engine, no libm pow);
     // one scan, all three verdicts map-side.

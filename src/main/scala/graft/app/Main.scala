@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   * clustering/SVM/RF/CV/BBHA knobs, with identical defaults. Datasets
   * resolve under DATASETS_PATH and results under RESULTS_PATH
   * (utils.py:7, core.py:140-147), defaulting to /var/data and
-  * /var/results like the reference's Dockerfile.
+  * /var/results like the reference's Dockerfile. `--use-broadcast` is
+  * accepted and ignored: the matrix always ships as a broadcast.
   */
 object Main {
 
@@ -58,20 +59,28 @@ object Main {
           case None => Some(0.6)
         }),
       numberOfWorkers = a.getOrElse("number-of-workers", "0").toInt,
-      useBroadcast = a.getOrElse("use-broadcast", "true") == "true",
       algorithm = a.getOrElse("algorithm", "1").toInt)
   }
 
-  def main(args: Array[String]): Unit = {
-    val cfg = buildConfig(parseArgs(args))
+  /** The session both entry points (this CLI and `api.ServiceMain`) run
+    * on: master from SPARK_MASTER (default local[4]), shuffle partitions
+    * from SPARK_GRAFT_CPUS (default 4), UI off, WARN log level.
+    */
+  def session(appName: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName(cfg.appName)
+      .appName(appName)
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val cfg = buildConfig(parseArgs(args))
+    val spark = session(cfg.appName)
     try {
       val result = Experiment.run(spark, cfg)
       println(s"[graft] best_metric=${result.bestMetric} " +

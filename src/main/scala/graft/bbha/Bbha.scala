@@ -15,8 +15,7 @@ case class Star(idx: Int, mask: Array[Int]) {
 /** Result of one fitness fan-out: per-star results (sorted by star index)
   * and the wall time of the distribute+compute+collect round.
   */
-case class EvalRound(results: Array[(Int, FitnessResult)], totalTime: Double,
-    predictedTimes: Map[Int, Double])
+case class EvalRound(results: Array[(Int, FitnessResult)], totalTime: Double)
 
 /** Binary Black Hole Algorithm — the reference's core search loop
   * (`binary_black_hole_spark`,
@@ -38,7 +37,8 @@ case class EvalRound(results: Array[(Int, FitnessResult)], totalTime: Double,
   *    iff |tanh(x_new)| > threshold; threshold = binaryThreshold or a
   *    fresh U(0,1) per dimension when None (696-705);
   *  - all metrics rounded to 4 decimals into flat accumulators
-  *    (554-560, 593-624) and per-host idle times (632-645, 707-714).
+  *    (554-560, 593-624) and per-host idle times (632-645, 707-714),
+  *    the latter counted over every partition a host ran in the round.
   *
   * RNG divergence (documented, SURVEY §7.4): the reference's streams are
   * CPython `random` + NumPy; we use `scala.util.Random` with the same
@@ -97,7 +97,6 @@ object Bbha {
     val partitionIds = mutable.ArrayBuffer[Int]()
     val fitnessAcc = mutable.ArrayBuffer[Double]()
     val timeExec = mutable.ArrayBuffer[Double]()
-    val predictedTimeExec = mutable.ArrayBuffer[Double]()
     val timesByIteration = mutable.ArrayBuffer[Double]()
     val timeTest = mutable.ArrayBuffer[Double]()
     val numOfIterations = mutable.ArrayBuffer[Double]()
@@ -106,7 +105,7 @@ object Bbha {
     val workersExecPerIter = mutable.LinkedHashMap[String, mutable.ArrayBuffer[(Int, Double)]]()
 
     def accumulate(round: EvalRound): Unit =
-      round.results.foreach { case (starIdx, d) =>
+      round.results.foreach { case (_, d) =>
         numberOfFeatures += d.nFeatures
         hosts += d.host
         partitionIds += d.partitionId
@@ -116,7 +115,6 @@ object Bbha {
         timeTest += r4(d.testTime)
         numOfIterations += r4(d.numIterations)
         trainScores += r4(d.trainScore)
-        predictedTimeExec += r4(round.predictedTimes.getOrElse(starIdx, -1.0))
       }
 
     // ---- init population (seeds random_state * (i+1))
@@ -144,15 +142,19 @@ object Bbha {
       accumulate(round)
       val resultByIdx = round.results.toMap
 
-      // per-host execution/idle bookkeeping (metaheuristics.py:618-645)
-      val execPerHost = mutable.LinkedHashMap[String, Double]()
+      // per-host execution/idle bookkeeping (metaheuristics.py:618-645).
+      // The reference's idle is round wall − summed execution, which holds
+      // for one slot per host; a host running several partitions has that
+      // many slots busy for the round, so idle = slots × wall − execution.
+      val perHost = mutable.LinkedHashMap[String, (Double, Set[Int])]()
       round.results.foreach { case (_, d) =>
-        execPerHost(d.host) = execPerHost.getOrElse(d.host, 0.0) + d.workerTime
+        val (sumT, slots) = perHost.getOrElse(d.host, (0.0, Set.empty[Int]))
+        perHost(d.host) = (sumT + d.workerTime, slots + d.partitionId)
       }
-      execPerHost.foreach { case (host, sumT) =>
+      perHost.foreach { case (host, (sumT, slots)) =>
         workersExecPerIter.getOrElseUpdate(host, mutable.ArrayBuffer()) += ((i, sumT))
         workersIdleTimes.getOrElseUpdate(host, mutable.ArrayBuffer()) +=
-          ((i, round.totalTime - sumT))
+          ((i, slots.size * round.totalTime - sumT))
       }
 
       // swap / event horizon (metaheuristics.py:647-694).
@@ -209,7 +211,8 @@ object Bbha {
     val metrics: Map[String, Any] = Map(
       "number_of_features" -> numberOfFeatures.toList,
       "execution_times" -> timeExec.toList,
-      "predicted_execution_times" -> predictedTimeExec.toList,
+      // no execution-time prediction: the reference's -1 per evaluation
+      "predicted_execution_times" -> List.fill(fitnessAcc.length)(-1.0),
       "fitness" -> fitnessAcc.toList,
       "times_by_iteration" -> timesByIteration.toList,
       "test_times" -> timeTest.toList,

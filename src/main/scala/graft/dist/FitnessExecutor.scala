@@ -3,31 +3,21 @@ package graft.dist
 import graft.bbha.{EvalRound, Star}
 import graft.fitness.FitnessResult
 import org.apache.spark.{Partitioner, SparkContext, TaskContext}
-import org.apache.spark.broadcast.Broadcast
 
-/** Star → partition placement (the reference's custom `partitionBy`
-  * functions, /root/reference/scripts/metaheuristics.py:277-298).
-  *
-  * Two modes, selected by `assignment`:
-  *  - None: contiguous block split `key * W // nStars` — the fallback
-  *    partitioner (metaheuristics.py:287-290);
-  *  - Some(map): learned-load-balancer bin assignment
-  *    (metaheuristics.py:156-166, 277-285 → dist.LoadBalancer here).
+/** Star → partition placement: the contiguous block split
+  * `key * W // nStars`, the reference's fallback partitioner
+  * (scripts/metaheuristics.py:287-290). Its other mode,
+  * bins packed by a learned execution-time model (metaheuristics.py:277-285),
+  * is not ported: the reference force-disables it (parameters.py:159).
   *
   * This is the one operator kept on the RDD API: the Dataset API exposes
   * no user-defined partitioner, and the whole point is exact star→worker
   * placement (SURVEY §4.2, §7.3).
   */
-class StarPartitioner(numWorkers: Int, nStars: Int,
-    assignment: Option[Map[Int, Int]]) extends Partitioner {
+class StarPartitioner(numWorkers: Int, nStars: Int) extends Partitioner {
   override def numPartitions: Int = numWorkers
-  override def getPartition(key: Any): Int = {
-    val k = key.asInstanceOf[Int]
-    assignment match {
-      case Some(m) => m(k)
-      case None => k * numWorkers / nStars
-    }
-  }
+  override def getPartition(key: Any): Int =
+    key.asInstanceOf[Int] * numWorkers / nStars
 }
 
 /** Fans one population's fitness evaluation out across the cluster:
@@ -42,50 +32,21 @@ class StarPartitioner(numWorkers: Int, nStars: Int,
   * shuffle; the expression matrix ships once as a Broadcast.
   */
 class FitnessExecutor(sc: SparkContext, numWorkers: Int,
-    fitness: (Array[Boolean], Int) => FitnessResult,
-    balancer: Option[Array[Star] => Map[Int, Double]] = None) extends Serializable {
+    fitness: (Array[Boolean], Int) => FitnessResult) extends Serializable {
 
   def evaluate(stars: Array[Star]): EvalRound = {
-    val nStars = stars.length
     val fitnessFn = fitness // avoid closing over `this`
-    val (assignment, predicted) = balancer match {
-      case Some(predictTimes) =>
-        val times = predictTimes(stars)
-        val neg = times.find(_._2 < 0)
-        require(neg.isEmpty,
-          s"load balancer predicted negative time for star ${neg.get._1}")
-        (Some(LoadBalancer.binPack(times, numWorkers)), times)
-      case None => (None, stars.map(s => s.idx -> -1.0).toMap)
-    }
     val start = System.nanoTime()
     val results = sc.parallelize(stars.map(s => (s.idx, s.mask)), numWorkers)
-      .partitionBy(new StarPartitioner(numWorkers, nStars, assignment))
+      .partitionBy(new StarPartitioner(numWorkers, stars.length))
       .mapPartitions(iter => iter.map { case (idx, mask) =>
         (idx, fitnessFn(mask.map(_ == 1), TaskContext.getPartitionId()))
       }, preservesPartitioning = true)
       .collect()
     val totalTime = (System.nanoTime() - start) / 1e9
-    // The reference indexes collected results positionally, which only
-    // matches star order because the fallback partitioner preserves it
-    // (metaheuristics.py:593+). Sorting by star index keeps that
-    // association correct under ANY placement (balancer bins included).
-    EvalRound(results.sortBy(_._1), totalTime, predicted)
-  }
-}
-
-/** Greedy LPT bin packing: sort stars by predicted time descending,
-  * always assign to the least-loaded bin — the `binpacking
-  * .to_constant_bin_number` replacement (metaheuristics.py:156-166).
-  */
-object LoadBalancer {
-  def binPack(times: Map[Int, Double], numBins: Int): Map[Int, Int] = {
-    val loads = new Array[Double](numBins)
-    val out = Map.newBuilder[Int, Int]
-    times.toSeq.sortBy { case (idx, t) => (-t, idx) }.foreach { case (idx, t) =>
-      val bin = loads.zipWithIndex.minBy { case (l, b) => (l, b) }._2
-      loads(bin) += t
-      out += idx -> bin
-    }
-    out.result()
+    // The reference indexes collected results positionally
+    // (metaheuristics.py:593+); sorting by star index states that
+    // association instead of relying on collect order.
+    EvalRound(results.sortBy(_._1), totalTime)
   }
 }

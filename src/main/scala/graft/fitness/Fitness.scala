@@ -2,10 +2,12 @@ package graft.fitness
 
 import graft.surv.{CIndex, Clinical, CoxPH, KMeansLocal}
 
-/** The 11-field fitness-result contract
-  * (`CrossValidationSparkResult`, /root/reference/scripts/metaheuristics.py:20-26;
-  * produced at /root/reference/scripts/main.py:167-179, error sentinel at
-  * main.py:184-197).
+/** The fitness-result contract (`CrossValidationSparkResult`, reference
+  * scripts/metaheuristics.py:20-26; produced at scripts/main.py:167-179,
+  * error sentinel at main.py:184-197). The reference's 11-tuple also
+  * carries each star's fitted estimator. That field is gone here: the only
+  * model sink is `Experiment`'s single refit of the winning subset
+  * ([[Fitness.fitModel]]), so search rows never carry a model.
   */
 case class FitnessResult(
     fitness: Double,
@@ -17,8 +19,7 @@ case class FitnessResult(
     timeByIteration: Double,
     testTime: Double,
     numIterations: Double,
-    trainScore: Double,
-    modelBytes: Option[Array[Byte]])
+    trainScore: Double)
 
 object FitnessResult {
   val NegInf: Double = Double.NegativeInfinity
@@ -27,7 +28,7 @@ object FitnessResult {
   /** Error sentinel (/root/reference/scripts/main.py:184-197). */
   def error(moreIsBetter: Boolean): FitnessResult = {
     val worst = if (moreIsBetter) NegInf else PosInf
-    FitnessResult(worst, -1.0, -1, "", 0, "", -1.0, -1.0, -1.0, worst, None)
+    FitnessResult(worst, -1.0, -1, "", 0, "", -1.0, -1.0, -1.0, worst)
   }
 
   /** Empty-mask sentinel (/root/reference/scripts/core.py:52-77): a star
@@ -36,7 +37,7 @@ object FitnessResult {
     */
   def emptyMask(moreIsBetter: Boolean): FitnessResult = {
     val worst = if (moreIsBetter) NegInf else PosInf
-    FitnessResult(worst, -1.0, -1, "", -1, "", -1.0, -1.0, -1.0, -1.0, None)
+    FitnessResult(worst, -1.0, -1, "", -1, "", -1.0, -1.0, -1.0, -1.0)
   }
 }
 
@@ -130,7 +131,7 @@ object Fitness {
     val secs = (System.nanoTime() - start) / 1e9
     FitnessResult(fitness, secs, partitionId, hostname,
       subset.headOption.map(_.length).getOrElse(0), timeLapse(start),
-      0.0, 0.0, 0.0, 0.0, None)
+      0.0, 0.0, 0.0, 0.0)
   }
 
   /** k-fold CV fitness for the estimator models
@@ -193,8 +194,7 @@ object Fitness {
       timeByIteration = timePerIter.sum / folds,
       testTime = testTime / folds,
       numIterations = iterCounts.sum / folds,
-      trainScore = if (cfg.returnTrainScores) trainScores.sum / folds else 0.0,
-      modelBytes = None)
+      trainScore = if (cfg.returnTrainScores) trainScores.sum / folds else 0.0)
   }
 
   /** Refit the model for one mask and return the trained artifact — used

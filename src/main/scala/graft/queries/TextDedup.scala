@@ -2175,7 +2175,7 @@ object TextDedup {
   }
 
   /** Temperature-sweep rebalancing table (p25): p7's language
-    * rebalancer with the temperature dial swept — per language, the
+    * rebalancing with the temperature dial swept — per language, the
     * sampling rate and kept count at λ ∈ {¼, ½, 1} of the
     * (n_min/n_lang)^λ law. λ = 1 flattens every language to the
     * smallest's size, λ = ½ is p7's production dial, λ = ¼ barely

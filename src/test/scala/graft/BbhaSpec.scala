@@ -1,7 +1,7 @@
 package graft
 
 import graft.bbha.{Bbha, EvalRound, Star}
-import graft.dist.{LoadBalancer, StarPartitioner}
+import graft.dist.StarPartitioner
 import graft.fitness.{Fitness, FitnessConfig, FitnessResult}
 import graft.surv.Clinical
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,9 +15,9 @@ class BbhaSpec extends AnyFunSuite {
     val results = stars.map { s =>
       val signal = s.mask.take(3).sum
       val fit = signal - 0.01 * s.mask.sum
-      (s.idx, FitnessResult(fit, 0.001, 0, "test-host", s.mask.sum, "", 0, 0, 0, 0, None))
+      (s.idx, FitnessResult(fit, 0.001, 0, "test-host", s.mask.sum, "", 0, 0, 0, 0))
     }
-    EvalRound(results.sortBy(_._1), 0.01, stars.map(s => s.idx -> -1.0).toMap)
+    EvalRound(results.sortBy(_._1), 0.01)
   }
 
   val cfg = Bbha.Config(nStars = 10, nIterations = 15, randomState = Some(42L))
@@ -61,6 +61,30 @@ class BbhaSpec extends AnyFunSuite {
     assert(fit.forall(v => v == math.round(v * 1e4) / 1e4))
     val hosts = out.metrics("hosts").asInstanceOf[List[String]]
     assert(hosts.forall(_ == "test-host"))
+  }
+
+  test("predicted_execution_times keeps the reference schema: -1 per evaluation") {
+    val out = Bbha.run(cfg, 12, toyEvaluate)
+    val predicted = out.metrics("predicted_execution_times").asInstanceOf[List[Double]]
+    assert(predicted == List.fill((cfg.nIterations + 1) * cfg.nStars)(-1.0))
+  }
+
+  test("per-host idle counts every partition the host ran in the round") {
+    // two partitions on one host, each busy 0.4 s of a 0.5 s round:
+    // 2 × 0.5 − 0.8 = 0.2 s idle
+    def twoSlots(stars: Array[Star]): EvalRound = EvalRound(stars.map(s =>
+      (s.idx, FitnessResult(1.0, 0.4, s.idx, "h", s.nSelected, "", 0, 0, 0, 0))), 0.5)
+    val out = Bbha.run(Bbha.Config(nStars = 2, nIterations = 1,
+      randomState = Some(3L)), 4, twoSlots)
+    val perIter = out.metrics("workers_idle_times_per_iteration")
+      .asInstanceOf[Map[String, List[(Int, Double)]]]
+    assert(perIter.keySet == Set("h"))
+    val List((iter, idle)) = perIter("h"): @unchecked
+    assert(iter == 0)
+    assert(math.abs(idle - 0.2) < 1e-9, s"idle $idle")
+    val summary = out.metrics("workers_idle_times")
+      .asInstanceOf[Map[String, Map[String, Double]]]
+    assert(summary("h") == Map("mean" -> 0.2, "std" -> 0.0))
   }
 
   test("randomSubset honors randint(1,n) bounds and shuffling") {
@@ -138,26 +162,10 @@ class FitnessSpec extends AnyFunSuite {
 
 class PartitionerSpec extends AnyFunSuite {
   test("fallback partitioner matches key * W // n (contiguous blocks)") {
-    val p = new StarPartitioner(3, 30, None)
+    val p = new StarPartitioner(3, 30)
     for (k <- 0 until 30)
       assert(p.getPartition(k) == k * 3 / 30)
     assert((0 until 30).map(p.getPartition).distinct == Seq(0, 1, 2))
-  }
-
-  test("bin packing conserves stars and respects bin count") {
-    val times = (0 until 17).map(i => i -> (i % 5 + 1).toDouble).toMap
-    val assign = LoadBalancer.binPack(times, 4)
-    assert(assign.keySet == times.keySet)
-    assert(assign.values.forall(b => b >= 0 && b < 4))
-    // LPT balance: max load ≤ 4/3 OPT + small slack; here just sanity
-    val loads = assign.groupBy(_._2).view
-      .mapValues(_.keys.map(times).sum).toMap
-    assert(loads.values.max - loads.values.min <= 5.0)
-  }
-
-  test("balancer assignment partitioner uses the map") {
-    val p = new StarPartitioner(2, 4, Some(Map(0 -> 1, 1 -> 0, 2 -> 1, 3 -> 0)))
-    assert(p.getPartition(0) == 1 && p.getPartition(3) == 0)
   }
 }
 
