@@ -74,9 +74,7 @@ object Assets {
     val unknown = wanted -- names.toSet
     require(unknown.isEmpty, s"unknown assets: ${unknown.mkString(",")}")
     builders.filter(b => wanted(b._1)).map { case (name, build) =>
-      val t0 = System.nanoTime()
-      build(spark, dir)
-      name -> (System.nanoTime() - t0) / 1e9
+      name -> Bench.timed(build(spark, dir))._2
     }
   }
 }

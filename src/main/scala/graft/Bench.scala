@@ -1,4 +1,5 @@
 package graft
+import graft.app.Experiment.{jsonValue => jstr}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
@@ -10,6 +11,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the dimension joins in the queries plan as broadcasts.
   */
 object Bench {
+
+  /** Runs `body` and returns its value with the wall seconds it took. */
+  def timed[A](body: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val a = body
+    (a, (System.nanoTime() - t0) / 1e9)
+  }
+
+  // 3 decimal places (1 ms grain) — full-precision doubles double the
+  // line length for no information, and the stdout line must stay small
+  // enough to survive the driver's log-tail capture (see runBench)
+  def r3(v: Double): String = // Locale.ROOT: never a decimal comma
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  def r2(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 
   /** The measurement + reporting half of the bench, factored from `main`
     * so `BenchSpec` can prove the error contract on an injected query
@@ -28,13 +44,13 @@ object Bench {
     // every aggregate, and fail the run loudly (non-zero exit) at the end.
     def pass(): Seq[(String, Double, Option[String])] =
       queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val err = try { fn(spark, sfDir).count(); None } catch {
-          case e: Throwable =>
-            Some(e.getClass.getSimpleName + ": " +
-              Option(e.getMessage).getOrElse("").replaceAll("\\s+", " ").take(200))
+        val (err, elapsed) = timed {
+          try { fn(spark, sfDir).count(); None } catch {
+            case e: Throwable =>
+              Some(e.getClass.getSimpleName + ": " +
+                Option(e.getMessage).getOrElse("").replaceAll("\\s+", " ").take(200))
+          }
         }
-        val elapsed = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache() // per-query persists must not leak
         (name, elapsed, err)
       }
@@ -73,15 +89,8 @@ object Bench {
       n -> passes.map(_(n)).sorted.apply(timedPasses / 2)
     }
 
-    // 3 decimal places (1 ms grain) — full-precision doubles double the
-    // line length for no information, and the stdout line must stay small
-    // enough to survive the driver's log-tail capture (see below)
-    def r3(v: Double): String = // Locale.ROOT: never a decimal comma
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def r2(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     def obj(kv: Seq[(String, Double)]): String =
-      kv.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+      kv.map { case (k, v) => jstr(k) + ":" + r3(v) }.mkString("{", ",", "}")
     // Stdout keys are the unique id prefix ("q16b_approx_percentiles" →
     // "q16b" — the contract's own example form) at 10 ms grain: the
     // driver's log-tail budget is 2000 chars and the full-name map is
@@ -95,7 +104,7 @@ object Bench {
     def objShort(kv: Seq[(String, Double)]): String =
       kv.map { case (k, v) =>
         val key = if (collides(k)) k else shortKey(k)
-        "\"" + key + "\":" + r2(v)
+        jstr(key) + ":" + r2(v)
       }.mkString("{", ",", "}")
     val passTotals = passes.map(p => names.map(p).sum)
       .map(r3).mkString("[", ",", "]")
@@ -115,23 +124,14 @@ object Bench {
     //    repo each round so the complete artifact survives regardless.
     val sfShort = sfDir.replaceAll(".*sf", "") // "/root/testdata/sf0.1" → 0.1
     val sfJson =
-      if (sfShort.matches("""\d+(\.\d+)?""")) sfShort else "\"" + sfDir + "\""
-    // JSON requires every char < 0x20 escaped; \s+ collapsing above only
-    // covers whitespace controls, so an exotic control char in an engine
-    // error message must not corrupt the one artifact that reports it
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+      if (sfShort.matches("""\d+(\.\d+)?""")) sfShort else jstr(sfDir)
     // stdout carries short query ids + exception class only (same
     // budget discipline as objShort — full names and messages would
     // blow the 2000-char tail in a mass-failure round, clipping the
     // very JSON that reports the failure); everything goes to the file.
     def errObj(key: String => String, f: String => String): String =
       errors.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + key(k) + "\":" + jstr(f(v)) }
+        .map { case (k, v) => jstr(key(k)) + ":" + jstr(f(v)) }
         .mkString("{", ",", "}")
     val errShort = if (errors.isEmpty) "" else {
       val short = errObj(k => if (collides(k)) k else shortKey(k),
@@ -141,7 +141,7 @@ object Bench {
     val errFull =
       if (errors.isEmpty) "" else s""","errors":${errObj(identity, identity)}"""
     val headline = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":${objShort(best)},"sf":$sfJson$errShort}"""
-    val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":${obj(best)},"sf":"$sfDir","warmup_passes":1,"timed_passes":$timedPasses,"agg":"per-query min of first 3","total_median5":${r3(totalMedian)},"queries_median5":${obj(median)},"pass_totals":$passTotals,"queries_per_pass":${passes.map(p => obj(names.map(n => n -> p(n)))).mkString("[", ",", "]")}$errFull}"""
+    val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":${obj(best)},"sf":${jstr(sfDir)},"warmup_passes":1,"timed_passes":$timedPasses,"agg":"per-query min of first 3","total_median5":${r3(totalMedian)},"queries_median5":${obj(median)},"pass_totals":$passTotals,"queries_per_pass":${passes.map(p => obj(names.map(n => n -> p(n)))).mkString("[", ",", "]")}$errFull}"""
     // r9 post-mortem: at 202 queries even the short-key headline outgrew
     // the driver's 2000-char log tail and BENCH_r09 recorded
     // "parsed": null. A compact summary printed AFTER the full line is
@@ -164,35 +164,10 @@ object Bench {
     Output(headline, full, errors, summary)
   }
 
-  /** The quantizer/offset-frame finishers legitimately window ≤32-row
-    * bounded aggregates with no partition key, and WindowExec logs
-    * `No Partition Defined for Window operation` for each — ~200
-    * known-bounded repeats per pass that bury any REAL unpartitioned
-    * window a regression might introduce. The replacement signal is
-    * `BoundedWindowSpec`, which walks every query's optimized plan and
-    * fails by name if an empty-partition window ever reads more than
-    * its documented row bound; with that guard in place the bench and
-    * verify logs silence this one logger so their tails stay
-    * warning-free (round-9 verdict, wrong-list item 4).
-    */
-  private[graft] def suppressBoundedWindowWarning(): Unit =
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    suppressBoundedWindowWarning()
+    val cpus = Session.cpus(32)
+    val spark = Session.build("graft-bench", s"local[$cpus]", cpus)
 
     val out = runBench(spark, sfDir, SparkEntry.queries)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Bench.{r3, timed}
+import graft.app.Experiment.{jsonValue => jstr}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Ingest-decontamination rehearsal (r15 verdict, directives 1–2):
@@ -92,27 +94,8 @@ object IngestRehearsal {
     val storeMode = if (args.length > 5) args(5) else "lc"
     require(storeMode == "lc" || storeMode == "bucketed",
       s"store must be lc|bucketed, got $storeMode")
-    val codec = sys.env.get("SPARK_GRAFT_CODEC")
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", shuffleParts.toString)
-    codec.foreach(c => builder.config("spark.io.compression.codec", c))
-    val spark = builder
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Bench.suppressBoundedWindowWarning()
-
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    val spark = Session.build("graft-ingest-rehearsal", "local[32]",
+      shuffleParts)
 
     val docs = Tables.documents(spark, dataDir)
       .select(col("doc_id"), col("text"))
@@ -166,7 +149,7 @@ object IngestRehearsal {
       s"maintained train-fp set diverged from from-scratch: $mismatches fps")
 
     def seriesJson(name: Int => String, v: Seq[(Int, Double)]): String =
-      v.map { case (i, s) => "\"" + name(i) + "\":" + r3(s) }
+      v.map { case (i, s) => jstr(name(i)) + ":" + r3(s) }
         .mkString("{", ",", "}")
 
     // the snapshot operator's own per-trigger cost: the real streaming
@@ -252,8 +235,8 @@ object IngestRehearsal {
       .map { case (i, _, _, n) => s""""rows$i":$n""" }
       .mkString("{", ",", "}")
 
-    val out = s"""{"metric":"ingest_rehearsal","sf":"$dataDir","k":$k,""" +
-      s""""store":"$storeMode",""" +
+    val out = s"""{"metric":"ingest_rehearsal","sf":${jstr(dataDir)},"k":$k,""" +
+      s""""store":${jstr(storeMode)},""" +
       s""""n_arrivals":$nArrivals,"snapshot_build_s":${r3(snapS)},""" +
       s""""maintainer_build_s":${r3(buildS)},"drops":$dropsJson,""" +
       s""""probes":$probesJson,"drops_norm":$normJson,""" +

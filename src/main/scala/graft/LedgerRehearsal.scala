@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.Bench.{r3, timed}
+import graft.app.Experiment.{jsonValue => jstr}
 import org.apache.spark.sql.functions._
 
 /** Multi-drop ledger rehearsal (r15, round-14 verdict directive 4):
@@ -76,27 +77,8 @@ object LedgerRehearsal {
       s"store must be lc|bucketed, got $storeMode")
     val nBuckets = if (args.length > 6) args(6).toInt else 64
     val dropDocs = if (args.length > 7) args(7).toLong else 0L
-    val codec = sys.env.get("SPARK_GRAFT_CODEC")
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", shuffleParts.toString)
-    codec.foreach(c => builder.config("spark.io.compression.codec", c))
-    val spark = builder
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Bench.suppressBoundedWindowWarning()
-
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    val spark = Session.build("graft-ledger-rehearsal", "local[32]",
+      shuffleParts)
 
     val docs = Tables.documents(spark, dataDir)
       .select(col("doc_id"), col("text"))
@@ -173,8 +155,8 @@ object LedgerRehearsal {
     // audit-shape, not production-shape — run audit=0 for the flatness
     // measurement and audit=1 for the merge-k ≡ recompute gate, and
     // let the artifact say which it was.
-    val out = s"""{"metric":"ledger_rehearsal","sf":"$dataDir","k":$k,""" +
-      s""""store":"$storeMode","n_buckets":$nBuckets,""" +
+    val out = s"""{"metric":"ledger_rehearsal","sf":${jstr(dataDir)},"k":$k,""" +
+      s""""store":${jstr(storeMode)},"n_buckets":$nBuckets,""" +
       s""""drop_docs":$dropDocs,""" +
       s""""audit":$audit,"standing_build_s":${r3(buildS)},""" +
       s""""drops":$dropsJson,"probes":$probesJson,""" +

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.app.Experiment.{jsonValue => jstr}
 
 /** Scale-rehearsal bench: times a NAMED SUBSET of the registered
   * queries against an arbitrary data directory (usually the
@@ -36,25 +36,10 @@ object ScaleBench {
     val names = args(1).split(",").toSet
     val passes = if (args.length > 2) args(2).toInt else 3
     val shuffleParts = if (args.length > 4) args(4).toInt else 32
-    // Spill-codec knob for disk-bound rehearsals: the sf1000 pair-join
-    // shuffle is ~3.5B slim long rows — zstd compresses them ~2× over
-    // lz4 and is the difference between fitting this box's free disk
-    // and not. On a cluster the same conf trades shuffle CPU for
-    // network/disk bytes; the round bench keeps lz4 (Spark default)
-    // so BENCH_r{N} numbers stay comparable.
-    val codec = sys.env.get("SPARK_GRAFT_CODEC")
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", shuffleParts.toString)
-    codec.foreach(c => builder.config("spark.io.compression.codec", c))
-    val spark = builder
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Bench.suppressBoundedWindowWarning()
+    // SPARK_GRAFT_CODEC=zstd is the spill knob for disk-bound
+    // rehearsals: the sf1000 pair-join shuffle is ~3.5B slim long rows,
+    // and zstd compresses them ~2× over lz4 (see Session)
+    val spark = Session.build("graft-scalebench", "local[32]", shuffleParts)
 
     val missing = names -- SparkEntry.queries.keySet
     require(missing.isEmpty, s"unknown queries: ${missing.mkString(",")}")
@@ -62,10 +47,8 @@ object ScaleBench {
       if (args.length > 5 && args(5).nonEmpty) args(5).split(",").toSet
       else Set.empty
     val assetRows = Assets.buildTimed(spark, dataDir, assetNames)
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val assetJson = assetRows
-      .map { case (n, t) => "\"" + n + "\":" + r3(t) }
+      .map { case (n, t) => jstr(n) + ":" + Bench.r3(t) }
       .mkString("{", ",", "}")
     val out = Bench.runBench(spark, dataDir,
       SparkEntry.queries.view.filterKeys(names).toMap, timedPasses = passes)

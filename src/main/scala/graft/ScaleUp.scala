@@ -1,5 +1,6 @@
 package graft
 
+import graft.app.Experiment.{jsonValue => jstr}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -263,15 +264,9 @@ object ScaleUp {
     val boilerPct = if (args.length > 4) args(4).toInt else 0
     require((tables -- AllTables).isEmpty,
       s"unknown tables: ${(tables -- AllTables).mkString(",")}")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build("graft-scaleup", "local[32]", 32)
     build(spark, srcDir, outDir, factor, tables, boilerPct)
-    println(s"""{"scaled":"$outDir","factor":$factor,"src":"$srcDir",""" +
+    println(s"""{"scaled":${jstr(outDir)},"factor":$factor,"src":${jstr(srcDir)},""" +
       s""""tables":${tables.size},"boilerPct":$boilerPct}""")
     spark.stop()
   }

@@ -14,9 +14,7 @@ object SparkEntry {
     * call or one explicit `QueryScope.releaseAll()`.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Rel.all ++ graft.queries.TextDedup.all ++ graft.queries.Embeddings.all ++
-      graft.queries.Events.all ++ graft.multimodal.Multimodal.all ++
-      graft.queries.Survival.all ++ graft.queries.Ingest.all
+    graft.queries.QueryScope.scopedAll(rawQueries)
 
   /** The UNSCOPED registry — building a frame never executes it, so
     * plan-inspection specs (`BoundedWindowSpec`) can walk lazy plans.

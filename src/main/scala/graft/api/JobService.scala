@@ -153,9 +153,7 @@ object JobService {
     case other => JsonMethods.compact(JsonMethods.render(other))
   }
 
-  def jsonQuote(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .flatMap(c => if (c < ' ') f"\\u${c.toInt}%04x" else c.toString) + "\""
+  def jsonQuote(s: String): String = graft.app.Experiment.jsonValue(s)
 
   def errorJson(msg: String): String = s"""{"error": ${jsonQuote(msg)}}"""
 
@@ -266,7 +264,7 @@ class JobService(backend: JobService.JobBackend,
             }
           })
           ex.getResponseHeaders.add("Location", s"/job/$id")
-          respond(ex, 201, s"""{"id": "$id"}""")
+          respond(ex, 201, s"""{"id": ${jsonQuote(id)}}""")
         } catch {
           case e: Throwable =>
             // a failed submission must not leave a zombie Running record

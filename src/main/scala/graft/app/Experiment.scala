@@ -114,17 +114,12 @@ object Experiment {
   }
 
   // ---- minimal deterministic JSON writer (driver-side tiny payloads,
-  //      SURVEY §1.1 row 5-6)
+  //      SURVEY §1.1 row 5-6). Its string case is the one JSON string
+  //      encoder every artifact writer in graft goes through.
 
   def jsonValue(v: Any): String = v match {
     case null => "null"
-    case s: String => "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    case s: String => "\"" + org.json4s.ParserUtil.quote(s, false) + "\""
     case d: Double =>
       if (d.isNaN) "null"
       else if (d.isPosInfinity) "1e999"

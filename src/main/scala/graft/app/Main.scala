@@ -1,5 +1,6 @@
 package graft.app
 
+import graft.Session
 import graft.bbha.Bbha
 import graft.fitness.FitnessConfig
 import org.apache.spark.sql.SparkSession
@@ -15,9 +16,17 @@ import org.apache.spark.sql.SparkSession
   */
 object Main {
 
+  /** `--key value` pairs. A flag with no value, or a stray token that
+    * would shift every later pair, fails naming the token.
+    */
   def parseArgs(args: Array[String]): Map[String, String] =
-    args.sliding(2, 2).collect {
+    args.grouped(2).map {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
+      case Array(k) if k.startsWith("--") =>
+        throw new IllegalArgumentException(s"$k has no value")
+      case a =>
+        throw new IllegalArgumentException(
+          s"expected a --key, got '${a.head}'")
     }.toMap
 
   def buildConfig(a: Map[String, String]): Experiment.Config = {
@@ -62,21 +71,13 @@ object Main {
       algorithm = a.getOrElse("algorithm", "1").toInt)
   }
 
-  /** The session both entry points (this CLI and `api.ServiceMain`) run
-    * on: master from SPARK_MASTER (default local[4]), shuffle partitions
-    * from SPARK_GRAFT_CPUS (default 4), UI off, WARN log level.
+  /** The [[Session]] both entry points (this CLI and `api.ServiceMain`)
+    * run on: master from SPARK_MASTER (default local[4]), shuffle
+    * partitions from SPARK_GRAFT_CPUS (default 4).
     */
-  def session(appName: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  def session(appName: String): SparkSession =
+    Session.build(appName, sys.env.getOrElse("SPARK_MASTER", "local[4]"),
+      Session.cpus(4))
 
   def main(args: Array[String]): Unit = {
     val cfg = buildConfig(parseArgs(args))

@@ -110,15 +110,7 @@ object Fitness {
   def clusteringFitness(cfg: FitnessConfig, subset: Array[Array[Double]],
       y: Array[Clinical], partitionId: Int): FitnessResult = {
     val start = System.nanoTime()
-    val labels = cfg.clusteringAlgorithm match {
-      case "k_means" =>
-        KMeansLocal.fit(subset, cfg.numberOfClusters,
-          seed = cfg.randomState.getOrElse(0L)).labels
-      case "spectral" =>
-        graft.surv.SpectralLocal.fit(subset, cfg.numberOfClusters,
-          seed = cfg.randomState.getOrElse(0L))
-      case other => throw new IllegalArgumentException(s"unknown clustering $other")
-    }
+    val (_, labels) = cluster(cfg, subset)
     // {E, T, group}: group enters the Cox model as ONE numeric covariate,
     // exactly like lifelines treats the int column (main.py:88-98)
     val covariates = labels.map(l => Array(l.toDouble))
@@ -161,17 +153,7 @@ object Fitness {
       val xTr = trainIdx.map(subset)
       val yTr = trainIdx.map(y)
       val fitStart = System.nanoTime()
-      val model: SurvivalEstimator = cfg.model match {
-        case "rf" => graft.surv.RandomSurvivalForest.fit(xTr, yTr,
-          nEstimators = cfg.rfNEstimators,
-          seed = cfg.randomState.getOrElse(0L),
-          treeNJobs = cfg.rfTreeNJobs)
-        case "svm" => graft.surv.SurvivalSVM.fit(xTr, yTr,
-          kernel = cfg.svmKernel, maxIter = cfg.svmMaxIterations,
-          isRegression = cfg.svmIsRegression,
-          seed = cfg.randomState.getOrElse(0L),
-          optimizer = cfg.svmOptimizer)
-      }
+      val model = fitEstimator(cfg, xTr, yTr)
       val fitSecs = (System.nanoTime() - fitStart) / 1e9
       val t0 = System.nanoTime()
       testScores(f) = CIndex.concordance(testIdx.map(y),
@@ -208,21 +190,44 @@ object Fitness {
       y: Array[Clinical], mask: Array[Boolean]): java.io.Serializable = {
     val subset = maskColumns(x, mask)
     cfg.model match {
-      case "clustering" => cfg.clusteringAlgorithm match {
-        case "k_means" =>
-          KMeansLocal.fit(subset, cfg.numberOfClusters,
-            seed = cfg.randomState.getOrElse(0L))
-        case "spectral" =>
-          graft.surv.SpectralLocal.fit(subset, cfg.numberOfClusters,
-            seed = cfg.randomState.getOrElse(0L))
-      }
-      case "rf" => graft.surv.RandomSurvivalForest.fit(subset, y,
-        nEstimators = cfg.rfNEstimators, seed = cfg.randomState.getOrElse(0L),
-        treeNJobs = cfg.rfTreeNJobs)
-      case "svm" => graft.surv.SurvivalSVM.fit(subset, y,
-        kernel = cfg.svmKernel, maxIter = cfg.svmMaxIterations,
-        isRegression = cfg.svmIsRegression, seed = cfg.randomState.getOrElse(0L))
+      case "clustering" => cluster(cfg, subset)._1
+      case _ => fitEstimator(cfg, subset, y)
     }
+  }
+
+  /** The one spelling of the clustering step (fitness and model sink):
+    * the fitted model `model.bin` holds, and the per-row labels.
+    */
+  private def cluster(cfg: FitnessConfig, subset: Array[Array[Double]])
+      : (java.io.Serializable, Array[Int]) = {
+    val seed = cfg.randomState.getOrElse(0L)
+    cfg.clusteringAlgorithm match {
+      case "k_means" =>
+        val r = KMeansLocal.fit(subset, cfg.numberOfClusters, seed = seed)
+        (r, r.labels)
+      case "spectral" =>
+        val labels = graft.surv.SpectralLocal.fit(subset,
+          cfg.numberOfClusters, seed = seed)
+        (labels, labels)
+      case other => throw new IllegalArgumentException(s"unknown clustering $other")
+    }
+  }
+
+  /** The one spelling of the survival estimator (CV folds and model
+    * sink), so every `FitnessConfig` knob reaches both.
+    */
+  private def fitEstimator(cfg: FitnessConfig, x: Array[Array[Double]],
+      y: Array[Clinical]): SurvivalEstimator = cfg.model match {
+    case "rf" => graft.surv.RandomSurvivalForest.fit(x, y,
+      nEstimators = cfg.rfNEstimators,
+      seed = cfg.randomState.getOrElse(0L),
+      treeNJobs = cfg.rfTreeNJobs)
+    case "svm" => graft.surv.SurvivalSVM.fit(x, y,
+      kernel = cfg.svmKernel, maxIter = cfg.svmMaxIterations,
+      isRegression = cfg.svmIsRegression,
+      seed = cfg.randomState.getOrElse(0L),
+      optimizer = cfg.svmOptimizer)
+    case other => throw new IllegalArgumentException(s"unknown model $other")
   }
 
   private def hostname: String =

@@ -1432,9 +1432,10 @@ object Multimodal {
 
   /** The UNSCOPED registry — plan-inspection specs read this so
     * building a frame never executes it; every external surface goes
-    * through [[all]], whose entries run under [[QueryScope.scoped]]
-    * (held intermediates park at scope exit and die at the next gated
-    * call or [[QueryScope.releaseAll]] — r15 cache hygiene).
+    * through [[graft.SparkEntry.queries]], whose entries run under
+    * [[QueryScope.scoped]] (held intermediates park at scope exit and
+    * die at the next gated call or [[QueryScope.releaseAll]] — r15 cache
+    * hygiene).
     */
   private[graft] val raw: Map[String, (SparkSession, String) => DataFrame] = Map(
     "m18_phash_bit_balance" -> (m18PhashBitBalance _),
@@ -1478,11 +1479,4 @@ object Multimodal {
       .withColumn("keep", col("admitted") && col("dims_ok"))
       .orderBy(col("doc_id"))
       .limit(2000)
-
-  /** Every gated entry runs under a [[graft.queries.QueryScope.scoped]]
-    * cache scope: held intermediates park at scope exit and die at the
-    * next gated call or `QueryScope.releaseAll()` (r15 cache hygiene).
-    */
-  val all: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.QueryScope.scopedAll(raw)
 }

@@ -1643,9 +1643,10 @@ object Embeddings {
 
   /** The UNSCOPED registry — plan-inspection specs read this so
     * building a frame never executes it; every external surface goes
-    * through [[all]], whose entries run under [[QueryScope.scoped]]
-    * (held intermediates park at scope exit and die at the next gated
-    * call or [[QueryScope.releaseAll]] — r15 cache hygiene).
+    * through [[graft.SparkEntry.queries]], whose entries run under
+    * [[QueryScope.scoped]] (held intermediates park at scope exit and
+    * die at the next gated call or [[QueryScope.releaseAll]] — r15 cache
+    * hygiene).
     */
   private[graft] val raw: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s32_label_margin" -> (s32LabelMargin _),
@@ -1681,11 +1682,4 @@ object Embeddings {
     "s5_lsh_neardup" -> (s5LshNearDup _),
     "s4_label_centroids" -> (s4LabelCentroids _),
   )
-
-  /** Every gated entry runs under a [[QueryScope.scoped]] cache
-    * scope: held intermediates park at scope exit and die at the next
-    * gated call or `QueryScope.releaseAll()` (r15 cache hygiene).
-    */
-  val all: Map[String, (SparkSession, String) => DataFrame] =
-    QueryScope.scopedAll(raw)
 }

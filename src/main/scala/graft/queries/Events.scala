@@ -1747,9 +1747,10 @@ object Events {
 
   /** The UNSCOPED registry — plan-inspection specs read this so
     * building a frame never executes it; every external surface goes
-    * through [[all]], whose entries run under [[QueryScope.scoped]]
-    * (held intermediates park at scope exit and die at the next gated
-    * call or [[QueryScope.releaseAll]] — r15 cache hygiene).
+    * through [[graft.SparkEntry.queries]], whose entries run under
+    * [[QueryScope.scoped]] (held intermediates park at scope exit and
+    * die at the next gated call or [[QueryScope.releaseAll]] — r15 cache
+    * hygiene).
     */
   private[graft] val raw: Map[String, (SparkSession, String) => DataFrame] = Map(
     "e37_value_outliers" -> (e37ValueOutliers _),
@@ -1791,11 +1792,4 @@ object Events {
     "e12_unconverted_views" -> (e12UnconvertedViews _),
     "e8_approx_users" -> (e8ApproxUsers _),
   )
-
-  /** Every gated entry runs under a [[QueryScope.scoped]] cache
-    * scope: held intermediates park at scope exit and die at the next
-    * gated call or `QueryScope.releaseAll()` (r15 cache hygiene).
-    */
-  val all: Map[String, (SparkSession, String) => DataFrame] =
-    QueryScope.scopedAll(raw)
 }

@@ -343,9 +343,10 @@ object Ingest {
 
   /** The UNSCOPED registry — plan-inspection specs read this so
     * building a frame never executes it; every external surface goes
-    * through [[all]], whose entries run under [[QueryScope.scoped]]
-    * (held intermediates park at scope exit and die at the next gated
-    * call or [[QueryScope.releaseAll]] — r15 cache hygiene).
+    * through [[graft.SparkEntry.queries]], whose entries run under
+    * [[QueryScope.scoped]] (held intermediates park at scope exit and
+    * die at the next gated call or [[QueryScope.releaseAll]] — r15 cache
+    * hygiene).
     */
   private[graft] val raw: Map[String, (SparkSession, String) => DataFrame] = Map(
     "p4_quality_filter" -> (p4QualityFilter _),
@@ -355,11 +356,4 @@ object Ingest {
     "d19_bloom_dedup" -> (d19BloomDedup _),
     "p6_ingest_manifest" -> (p6IngestManifest _),
   )
-
-  /** Every gated entry runs under a [[QueryScope.scoped]] cache
-    * scope: held intermediates park at scope exit and die at the next
-    * gated call or `QueryScope.releaseAll()` (r15 cache hygiene).
-    */
-  val all: Map[String, (SparkSession, String) => DataFrame] =
-    QueryScope.scopedAll(raw)
 }

@@ -17,12 +17,12 @@ import scala.collection.mutable.ArrayBuffer
   *
   *  - intermediates register with [[hold]] (the `.held()` postfix)
   *    instead of bare `.persist()`;
-  *  - every GATED entry point runs under [[scoped]] (the family
-  *    registries wrap their maps via [[scopedAll]]): the OUTERMOST
-  *    scope releases every previously parked frame at ENTRY, and parks
-  *    its own held frames at successful exit. Nested scopes hand their
-  *    holds to the enclosing scope, so a gated query composing another
-  *    gated query still parks exactly one generation.
+  *  - every GATED entry point runs under [[scoped]] (`SparkEntry.queries`
+  *    wraps the registry via [[scopedAll]]): the OUTERMOST scope
+  *    releases every previously parked frame at ENTRY, and parks its own
+  *    held frames at successful exit. Nested scopes hand their holds to
+  *    the enclosing scope, so a gated query composing another gated
+  *    query still parks exactly one generation.
   *
   * Why park-then-release-next rather than pin-the-output-and-release-
   * now (the design this replaced, measured): eagerly persisting +
@@ -167,9 +167,9 @@ object QueryScope {
     case Nil    => dfs.foreach(parked.add)
   }
 
-  /** Wrap a family's query registry so every gated entry runs
-    * [[scoped]]. The raw map stays available for plan-inspection specs
-    * that must not trigger the release bookkeeping.
+  /** Wrap a query registry so every gated entry runs [[scoped]]. The
+    * raw map stays available for plan-inspection specs that must not
+    * trigger the release bookkeeping.
     */
   def scopedAll(
       raw: Map[String, (SparkSession, String) => DataFrame])

@@ -678,9 +678,10 @@ object Survival {
 
   /** The UNSCOPED registry — plan-inspection specs read this so
     * building a frame never executes it; every external surface goes
-    * through [[all]], whose entries run under [[QueryScope.scoped]]
-    * (held intermediates park at scope exit and die at the next gated
-    * call or [[QueryScope.releaseAll]] — r15 cache hygiene).
+    * through [[graft.SparkEntry.queries]], whose entries run under
+    * [[QueryScope.scoped]] (held intermediates park at scope exit and
+    * die at the next gated call or [[QueryScope.releaseAll]] — r15 cache
+    * hygiene).
     */
   private[graft] val raw: Map[String, (SparkSession, String) => DataFrame] = Map(
     "v14_weibull_fit" -> (v14WeibullFit _),
@@ -698,11 +699,4 @@ object Survival {
     "v9_competing_risks" -> (v9CompetingRisks _),
     "v12_cox_hr" -> (v12CoxHazardRatio _),
   )
-
-  /** Every gated entry runs under a [[QueryScope.scoped]] cache
-    * scope: held intermediates park at scope exit and die at the next
-    * gated call or `QueryScope.releaseAll()` (r15 cache hygiene).
-    */
-  val all: Map[String, (SparkSession, String) => DataFrame] =
-    QueryScope.scopedAll(raw)
 }

@@ -1193,17 +1193,20 @@ object TextDedup {
     */
   /** Edge-count bound under which [[starContractComponents]] finishes
     * the closure DRIVER-SIDE (exact union-find over the collected edge
-    * set) instead of iterating distributed rounds: 2M canonical edges ≈
-    * 32 MB of longs — bounded state, the e28/e31 pattern (guide §1.2 /
-    * §5: a ≤bound collect of an already-aggregated frame, never the
-    * corpus). Every distributed round costs a checkpoint job + a count
-    * job (+ a convergence anti-join near the fixpoint) over O(log n)
-    * rounds; when the canonical edge set fits the bound, ONE collect
+    * set) instead of iterating distributed rounds: 2M canonical edges
+    * are 32 MB of raw longs, but the collected tuples plus the boxed
+    * union-find map hold roughly ten times that, a few hundred MB of
+    * driver heap at the bound — still bounded state, the e28/e31
+    * pattern (guide §1.2 / §5: a ≤bound collect of an already-aggregated
+    * frame, never the corpus). Every distributed round costs a
+    * checkpoint job + a count job (+ a convergence anti-join near the
+    * fixpoint) over O(log n) rounds; when the canonical edge set fits the bound, ONE collect
     * replaces them all and the result is the same min-id labeling by
     * construction. Above the bound the distributed loop runs unchanged
     * — and re-checks the bound each round, so a shrinking frontier
     * hands over as soon as it fits. Conf-tunable for cluster drivers
-    * with more memory (`spark.graft.star.driverMaxEdges`).
+    * with more memory (`spark.graft.star.driverMaxEdges`); a value that
+    * is not an integer fails the query naming the key.
     */
   private[graft] val StarDriverMaxEdges = 2000000L
 
@@ -1280,7 +1283,9 @@ object TextDedup {
     // the ContextCleaner once unreferenced.)
     val spark = edges.sparkSession
     val driverMax = spark.conf.getOption("spark.graft.star.driverMaxEdges")
-      .map(_.toLong).getOrElse(StarDriverMaxEdges)
+      .map(v => v.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"spark.graft.star.driverMaxEdges must be an integer edge count, got '$v'")))
+      .getOrElse(StarDriverMaxEdges)
     var cur = canon(edges).localCheckpoint(true)
     var curCnt = cur.count()
     var rounds = 0
@@ -5257,9 +5262,10 @@ object TextDedup {
 
   /** The UNSCOPED registry — plan-inspection specs read this so
     * building a frame never executes it; every external surface goes
-    * through [[all]], whose entries run under [[QueryScope.scoped]]
-    * (held intermediates park at scope exit and die at the next gated
-    * call or [[QueryScope.releaseAll]] — r15 cache hygiene).
+    * through [[graft.SparkEntry.queries]], whose entries run under
+    * [[QueryScope.scoped]] (held intermediates park at scope exit and
+    * die at the next gated call or [[QueryScope.releaseAll]] — r15 cache
+    * hygiene).
     */
   private[graft] val raw: Map[String, (SparkSession, String) => DataFrame] = Map(
     "t33_token_length_profile" -> (t33TokenLengthProfile _),
@@ -5374,11 +5380,4 @@ object TextDedup {
     "t30_lang_confusion" -> (t30LangConfusion _),
     "p28_quota_frontier" -> ((s: SparkSession, d: String) => p28QuotaFrontier(s, d)),
   )
-
-  /** Every gated entry runs under a [[QueryScope.scoped]] cache
-    * scope: held intermediates park at scope exit and die at the next
-    * gated call or `QueryScope.releaseAll()` (r15 cache hygiene).
-    */
-  val all: Map[String, (SparkSession, String) => DataFrame] =
-    QueryScope.scopedAll(raw)
 }

@@ -14,11 +14,11 @@ import graft.fitness.SurvivalEstimator
   *   rank_ratio = 0 (regression, `--svm-is-regression` default true):
   *     squared error on log-time for events, one-sided for censored
   *     (only penalized when predicted below the censoring time).
-  * Optimized by deterministic gradient descent with backtracking; the
-  * reference's avltree/rbtree choice is an O(n log n) gradient trick for
-  * the same objective — at task-local n (hundreds) the direct pair sweep
-  * is faster than tree bookkeeping, so the optimizer name only selects
-  * instrumentation labels, not semantics.
+  * Optimized by deterministic gradient descent with backtracking. For
+  * the ranking objective, `avltree`/`rbtree` select the O(n log n)
+  * order-statistic gradient ([[RankingGradient]]) and any other name the
+  * direct pair sweep; the two agree to ~1e-8, not bit for bit, so the
+  * optimizer name reaches the fitted model.
   */
 object SurvivalSVM {
 

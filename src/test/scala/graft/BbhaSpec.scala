@@ -2,8 +2,8 @@ package graft
 
 import graft.bbha.{Bbha, EvalRound, Star}
 import graft.dist.StarPartitioner
-import graft.fitness.{Fitness, FitnessConfig, FitnessResult}
-import graft.surv.Clinical
+import graft.fitness.{Fitness, FitnessConfig, FitnessResult, SurvivalEstimator}
+import graft.surv.{Clinical, SurvivalSVM}
 import org.scalatest.funsuite.AnyFunSuite
 
 class BbhaSpec extends AnyFunSuite {
@@ -157,6 +157,24 @@ class FitnessSpec extends AnyFunSuite {
       x, y, Array(true, true), 0)
     assert(r.fitness > 0.6, s"fitness ${r.fitness}")
     assert(r.numIterations > 0)
+  }
+
+  test("fitModel refits the ranking SVM with the configured optimizer") {
+    // the tree and direct gradients agree only to ~1e-8, so a refit that
+    // drops --svm-optimizer shows up in the risks' low bits (continuous,
+    // censored times: the planted x/y above have too many ties to show it)
+    val r = new scala.util.Random(13)
+    val xs = Array.fill(40)(Array.fill(3)(r.nextDouble() * 2 - 1))
+    val ys = xs.map(row =>
+      Clinical(r.nextDouble() > 0.2, math.exp(-2.0 * row(0)) + r.nextDouble()))
+    val c = cfg.copy(model = "svm", svmIsRegression = false,
+      svmOptimizer = "direct", svmMaxIterations = 200)
+    val model = Fitness.fitModel(c, xs, ys, Array(true, true, true))
+      .asInstanceOf[SurvivalEstimator]
+    val direct = SurvivalSVM.fit(xs, ys, kernel = c.svmKernel,
+      maxIter = c.svmMaxIterations, isRegression = false, seed = 1L,
+      optimizer = "direct")
+    assert(xs.map(model.risk).toSeq == xs.map(direct.risk).toSeq)
   }
 }
 

@@ -45,4 +45,17 @@ class MainSpec extends AnyFunSuite {
       Seq("--use-broadcast", "false")
     assert(Main.buildConfig(Main.parseArgs(args.toArray)) == Main.buildConfig(required))
   }
+
+  test("a trailing flag with no value fails naming the flag") {
+    val args = Array("--app-name", "exp", "--n-stars")
+    val e = intercept[IllegalArgumentException](Main.parseArgs(args))
+    assert(e.getMessage == "--n-stars has no value", e.getMessage)
+  }
+
+  test("a stray token fails instead of shifting every later pair") {
+    // sliding pairs would read (extra, --n-stars) and drop "5": 30 stars
+    val args = Array("--model", "svm", "extra", "--n-stars", "5")
+    val e = intercept[IllegalArgumentException](Main.parseArgs(args))
+    assert(e.getMessage.contains("'extra'"), e.getMessage)
+  }
 }

@@ -92,4 +92,16 @@ class StarContractSpec extends AnyFunSuite {
     assert(rounds == 0)
     assert(labels.as[(Long, Long)].collect().toMap == Map(5L -> 5L, 7L -> 7L))
   }
+
+  test("a malformed driverMaxEdges conf fails naming the key") {
+    import spark.implicits._
+    val nodes = Seq(0L, 1L).toDF("id")
+    val edges = Seq((0L, 1L)).toDF("src", "dst")
+    spark.conf.set("spark.graft.star.driverMaxEdges", "2M")
+    val e = try intercept[IllegalArgumentException] {
+      TextDedup.starContractComponents(nodes, edges)
+    } finally spark.conf.unset("spark.graft.star.driverMaxEdges")
+    assert(e.getMessage.contains("spark.graft.star.driverMaxEdges") &&
+      e.getMessage.contains("'2M'"), e.getMessage)
+  }
 }
